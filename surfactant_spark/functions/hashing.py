@@ -28,14 +28,6 @@ def sha256_hex(data: bytes) -> str:
     return hashlib.sha256(data).hexdigest()
 
 
-def sha1_hex(data: bytes) -> str:
-    return hashlib.sha1(data).hexdigest()
-
-
-def md5_hex(data: bytes) -> str:
-    return hashlib.md5(data).hexdigest()
-
-
 def canon_uuid(sha256: str) -> str:
     """Deterministic canonical node UUID from a content hash."""
     return str(uuid.uuid5(SURFACTANT_SPARK_NS, "sha256:" + sha256))

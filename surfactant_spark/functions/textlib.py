@@ -41,7 +41,6 @@ _ENTITIES = (
 
 _MENTION_RE = re.compile(r"\b(lib|bundle)://([A-Za-z0-9_.\-/:~]+)")
 _TITLE_RE = re.compile(rb"<title[^>]*>(.*?)</title>", re.IGNORECASE | re.DOTALL)
-_TOKEN_RE = re.compile(r"[A-Za-z][A-Za-z0-9_.\-]{1,}")
 
 
 def extract_text(html: bytes) -> str:
@@ -161,9 +160,3 @@ def quality_score(text: str) -> float:
     len_score = min(n / 500.0, 1.0)
     wl_score = 1.0 if 3.0 <= mean_wl <= 10.0 else 0.5
     return round(0.35 * len_score + 0.3 * alpha + 0.2 * min(stop * 4, 1.0) + 0.15 * wl_score, 6)
-
-
-def token_mentions(text: str, min_len: int = 4) -> List[str]:
-    """Vocabulary-token candidate mentions from extracted text — used
-    for the documents-table driver queries where there is no markup."""
-    return [t.lower() for t in _TOKEN_RE.findall(text or "") if len(t) >= min_len]

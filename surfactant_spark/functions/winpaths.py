@@ -24,7 +24,7 @@ All probe keys are emitted through :func:`win_norm` so string equality
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence
 
 from .paths import win_is_absolute, win_join, win_norm, win_parent_posix
 
@@ -121,9 +121,3 @@ def parse_private_paths(private_path: str) -> List[str]:
     import pathlib
 
     return [pathlib.PureWindowsPath(p).as_posix() for p in private_path.split(";")]
-
-
-def normalized_install_path_keys(install_paths: Sequence[str]) -> List[Tuple[str, str]]:
-    """(raw, normalized) pairs for a node's installPaths — the build side
-    of every Windows-family link join."""
-    return [(ip, win_norm(ip)) for ip in install_paths or []]

@@ -10,12 +10,17 @@ Five families, each a `DataFrame -> DataFrame` built Spark-first:
 - simhash       : 64-bit simhash + hamming-band blocking
 - embedding     : cosine near-dup over array<float> with blocking
 
+Every capped hash-keyed pair family (minhash, simhash, embedding,
+containment, winnowing, and multimodal.media_near_dup) generates its
+candidates through ONE primitive, :func:`blocked_pairs`, and keeps
+only its own key generation and verify step.
+
 Everything except simhash stays in built-in JVM expressions
 (whole-stage codegen); the signatures use the SQL-portable md5-prefix
 hash (functions/hashing.py) so DuckDB can replay them exactly.
 
 Scale notes: LSH band self-join shuffles on band keys — band buckets
-are bounded (we cap bucket width defensively and log drops); pair
+are bounded (we cap bucket width defensively and report drops); pair
 generation uses `id1 < id2` to halve the shuffle; exact-verify runs
 only on candidate pairs, never all-pairs.
 """
@@ -25,7 +30,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-_MERSENNE61 = (1 << 61) - 1
 _P31 = 2147483647  # functions.hashing.P31
 
 
@@ -136,21 +140,6 @@ def shingle_table(
     return tok.select(*cols, F.array_distinct(sh).alias("sh"))
 
 
-def shingles_col(text_col: Column, n: int = 3) -> Column:
-    """Single-expression shingles — ONLY for tiny inputs/tests; see
-    shingles_from_toks for why this is slow on real data."""
-    toks = F.split(F.trim(F.lower(text_col)), r"\s+")
-    k = F.size(toks)
-    return F.when(k <= n, F.array(F.array_join(toks, " "))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), k - n),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-            ),
-        )
-    )
-
-
 def base_hash_array(sh_col: Column) -> Column:
     """31-bit base hash per shingle (functions.hashing.shingle_base_hash
     twin): one md5 per shingle, the only expensive step of MinHash."""
@@ -186,19 +175,6 @@ def minhash_sig_array(hv_col: Column, k: int = 16) -> Column:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 16, n: int = 3
-) -> DataFrame:
-    """(id, mh0..mh{k-1}) — kept for oracle/debug use."""
-    hv_df = shingle_table(docs, id_col, text_col, n).select(
-        F.col(id_col), base_hash_array(F.col("sh")).alias("hv")
-    )
-    sig = minhash_sig_array(F.col("hv"), k)
-    return hv_df.select(
-        F.col(id_col), *[F.element_at(sig, i + 1).alias(f"mh{i}") for i in range(k)]
-    )
-
-
 def band_keys_array(sig_col: Column, k: int = 16, bands: int = 4) -> Column:
     """Array of LSH band keys from a signature array: band b hashes the
     comma-joined decimal strings of its signature slice — matches
@@ -222,22 +198,56 @@ def band_keys_array(sig_col: Column, k: int = 16, bands: int = 4) -> Column:
     )
 
 
-def minhash_band_keys(
-    sigs_or_docs: DataFrame, id_col: str = "doc_id", k: int = 16, bands: int = 4
-) -> DataFrame:
-    """(id, band, band_key) from a (id, mh0..mhk) signature table."""
-    sig = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    return sigs_or_docs.select(
-        F.col(id_col), F.posexplode(band_keys_array(sig, k, bands)).alias("band", "band_key")
-    )
-
-
 def jaccard_col(a: Column, b: Column) -> Column:
     """Exact Jaccard of two distinct-element arrays. |union| is derived
     as |a|+|b|-|inter| — half the cost of materializing array_union."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+
+
+def blocked_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    keys: tuple,
+    max_bucket: int,
+    carry: tuple = (),
+):
+    """Blocked candidate-pair generation, the shape every hash-keyed
+    near-dup family shares: rows of ``keyed`` that agree on ``keys``
+    (a band key, a simhash block, a shingle, a quantizer cell) are
+    candidate pairs, and buckets wider than ``max_bucket`` are dropped
+    — at 100 TB a single degenerate bucket (empty docs, boilerplate
+    n-grams) would otherwise make one task quadratic.
+
+    One count-only width aggregation makes the cap decision, so no
+    aggregation buffer ever holds a bucket's id list; keys with
+    ``1 < width <= max_bucket`` are joined back and self-joined with
+    ``id1 < id2`` (half the pair shuffle), each side carrying the
+    ``carry`` columns as ``<col>1`` / ``<col>2``.
+
+    Returns (candidates, dropped). ``candidates`` is (keys..., id1,
+    carry1..., id2, carry2...) with one row per SHARED KEY — a pair
+    that shares several keys repeats, and the caller dedupes or counts.
+    ``dropped`` is (keys..., width) for every bucket the cap removed:
+    the recall audit, since a pair whose shared keys all sit in dropped
+    buckets is never a candidate."""
+    keys = list(keys)
+    widths = keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("width"))
+    sized = widths.where(
+        (F.col("width") > 1) & (F.col("width") <= max_bucket)
+    ).select(*keys)
+    kept = keyed.join(sized, keys)
+
+    def side(i: int) -> DataFrame:
+        return kept.select(
+            F.col(id_col).alias(f"id{i}"),
+            *[F.col(c).alias(f"{c}{i}") for c in carry],
+            *keys,
+        )
+
+    candidates = side(1).join(side(2), keys).where(F.col("id1") < F.col("id2"))
+    return candidates, widths.where(F.col("width") > max_bucket)
 
 
 def dedup_minhash(
@@ -250,73 +260,12 @@ def dedup_minhash(
     threshold: float = 0.8,
     max_bucket: int = 64,
 ) -> DataFrame:
-    """MinHash + LSH near-dup pairs with exact Jaccard verification.
-
-    shingle -> signature -> band keys -> same-bucket self-join
-    (id1 < id2) -> distinct candidate pairs -> exact shingle-set
-    Jaccard >= threshold. Buckets wider than ``max_bucket`` are dropped
-    defensively (degenerate content, e.g. empty docs) — at 100 TB a
-    single mega-bucket would otherwise quadratically explode one task.
-    Returns (id1, id2, jaccard).
-    """
-    # chained narrow projections (tokens -> shingles -> base hashes ->
-    # signatures -> band keys): each array is materialized before the
-    # next lambda touches it, so nothing is re-evaluated per element
-    # (Catalyst does no CSE inside higher-order-function lambdas).
-    # The shingle table feeds three consumers (band path + both sides
-    # of the verify join) — localCheckpoint computes the md5s once
-    # instead of three times (6.7 -> ~4 s warm at sf0.1); at 100 TB the
-    # same role is played by a parquet stage snapshot. spread_partitions
-    # keeps the md5 pass off a single task when the corpus fits one
-    # scan split (see session.spread_partitions).
-    sh_df, bands_df, widths = _minhash_core(docs, id_col, text_col, k, bands, n)
-    return _minhash_pairs(sh_df, bands_df, widths, id_col, threshold, max_bucket)
-
-
-def _minhash_core(docs, id_col, text_col, k, bands, n, checkpoint=True):
-    """Shared shingle -> signature -> band-key -> bucket-width chain.
-    ``checkpoint=False`` keeps the Arrow/md5 pass streaming for
-    single-consumer callers (the standalone dropped-buckets audit);
-    multi-consumer callers checkpoint so Python runs once."""
-    from ..session import spread_partitions
-
-    sh_df = shingle_table(spread_partitions(docs), id_col, text_col, n, hashed=True)
-    if checkpoint:
-        sh_df = sh_df.localCheckpoint(eager=True)
-    sig_df = sh_df.select(F.col(id_col), minhash_sig_array(F.col("sh"), k).alias("sig"))
-    bands_df = sig_df.select(
-        F.col(id_col),
-        F.posexplode(band_keys_array(F.col("sig"), k, bands)).alias("band", "band_key"),
-    )
-    # count-only width aggregation: the cap decision never materializes
-    # a bucket's id list in an agg buffer — a degenerate mega-bucket
-    # (empty docs at 100 TB) costs one long here, not one giant array
-    widths = bands_df.groupBy("band", "band_key").agg(
-        F.count(F.lit(1)).alias("width")
-    )
-    return sh_df, bands_df, widths
-
-
-def _minhash_pairs(sh_df, bands_df, widths, id_col, threshold, max_bucket):
-    sized = widths.where(
-        (F.col("width") > 1) & (F.col("width") <= max_bucket)
-    ).select("band", "band_key")
-    kept = bands_df.join(sized, ["band", "band_key"])
-    a = kept.select(F.col(id_col).alias("id1"), "band", "band_key")
-    b2 = kept.select(F.col(id_col).alias("id2"), "band", "band_key")
-    pairs = (
-        a.join(b2, ["band", "band_key"])
-        .where(F.col("id1") < F.col("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
-    sh = sh_df
-    verified = (
-        pairs.join(sh.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1")), "id1")
-        .join(sh.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2")), "id2")
-        .select("id1", "id2", F.round(jaccard_col(F.col("sh1"), F.col("sh2")), 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified
+    """MinHash + LSH near-dup pairs with exact Jaccard verification:
+    the pairs half of :func:`dedup_minhash_with_audit`.
+    Returns (id1, id2, jaccard)."""
+    return dedup_minhash_with_audit(
+        docs, id_col, text_col, k, bands, n, threshold, max_bucket
+    )[0]
 
 
 def dedup_minhash_with_audit(
@@ -329,16 +278,46 @@ def dedup_minhash_with_audit(
     threshold: float = 0.8,
     max_bucket: int = 64,
 ):
-    """(pairs, dropped_buckets) from ONE shingle/md5 pass. Running
-    :func:`dedup_minhash` and :func:`minhash_dropped_buckets` separately
-    executes the corpus-scale Arrow pass twice — at 100 TB that is an
-    entire extra pass per pipeline run; here both outputs derive from
-    the same checkpointed shingle table and band-key chain (the width
-    aggregation re-runs per consumer, but over the checkpoint — a
-    JVM-side count shuffle, not the Python pass)."""
-    sh_df, bands_df, widths = _minhash_core(docs, id_col, text_col, k, bands, n)
-    pairs = _minhash_pairs(sh_df, bands_df, widths, id_col, threshold, max_bucket)
-    return pairs, widths.where(F.col("width") > max_bucket)
+    """MinHash + LSH near-dup pairs and their dropped-bucket audit from
+    ONE shingle/md5 pass.
+
+    shingle -> signature -> band keys -> :func:`blocked_pairs` on
+    (band, band_key) -> distinct candidate pairs -> exact shingle-set
+    Jaccard >= threshold. Buckets wider than ``max_bucket`` are dropped
+    defensively (degenerate content, e.g. empty docs) and reported in
+    the second output, (band, band_key, width): a candidate pair whose
+    ONLY shared band bucket is dropped is silently lost, and the audit
+    makes that recall bound observable per run.
+    Returns ((id1, id2, jaccard), (band, band_key, width))."""
+    from ..session import spread_partitions
+
+    # chained narrow projections (tokens -> shingles -> base hashes ->
+    # signatures -> band keys): each array is materialized before the
+    # next lambda touches it, so nothing is re-evaluated per element
+    # (Catalyst does no CSE inside higher-order-function lambdas).
+    # The shingle table feeds three consumers (band path + both sides
+    # of the verify join) — localCheckpoint computes the md5s once
+    # instead of three times (6.7 -> ~4 s warm at sf0.1); at 100 TB the
+    # same role is played by a parquet stage snapshot. spread_partitions
+    # keeps the md5 pass off a single task when the corpus fits one
+    # scan split (see session.spread_partitions).
+    sh = shingle_table(
+        spread_partitions(docs), id_col, text_col, n, hashed=True
+    ).localCheckpoint(eager=True)
+    sig_df = sh.select(F.col(id_col), minhash_sig_array(F.col("sh"), k).alias("sig"))
+    bands_df = sig_df.select(
+        F.col(id_col),
+        F.posexplode(band_keys_array(F.col("sig"), k, bands)).alias("band", "band_key"),
+    )
+    cand, dropped = blocked_pairs(bands_df, id_col, ("band", "band_key"), max_bucket)
+    verified = (
+        cand.dropDuplicates(["id1", "id2"])
+        .join(sh.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1")), "id1")
+        .join(sh.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2")), "id2")
+        .select("id1", "id2", F.round(jaccard_col(F.col("sh1"), F.col("sh2")), 6).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+    return verified, dropped
 
 
 @F.pandas_udf(T.LongType())
@@ -388,32 +367,44 @@ def dedup_simhash(
     n_blocks: int = 4,
     max_bucket: int = 64,
 ) -> DataFrame:
-    """SimHash near-dup pairs: block on 16-bit simhash slices (a pair
-    within hamming distance <= n_blocks-1 shares at least one block by
-    pigeonhole), verify exact hamming distance.
-
-    Buckets wider than ``max_bucket`` are dropped before the self-join
-    (same guard as dedup_minhash): a hot block_key — e.g. simhash 0 for
-    empty/near-empty docs — would otherwise make one bucket quadratic at
-    100 TB. The width filter is a count-only aggregation joined back, so
-    no aggregation buffer ever holds a full degenerate bucket either."""
-    blocks, widths = _simhash_core(docs, id_col, text_col, n_blocks)
-    return _simhash_pairs(blocks, widths, id_col, max_hamming, max_bucket)
+    """SimHash near-dup pairs: the pairs half of
+    :func:`dedup_simhash_with_audit`. Returns (id1, id2, hamming)."""
+    return dedup_simhash_with_audit(
+        docs, id_col, text_col, max_hamming, n_blocks, max_bucket
+    )[0]
 
 
-def _simhash_core(docs, id_col, text_col, n_blocks, checkpoint=True):
-    """Shared Arrow-simhash -> 16-bit-block -> bucket-width chain.
-    ``checkpoint=True`` (multi-consumer callers) runs the Python pass
-    exactly once over the corpus and spreads it off a single scan
-    split; ``checkpoint=False`` keeps it streaming for the standalone
-    single-consumer audit."""
+def dedup_simhash_with_audit(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+    n_blocks: int = 4,
+    max_bucket: int = 64,
+):
+    """SimHash near-dup pairs and their dropped-bucket audit from ONE
+    Arrow simhash pass: block on 16-bit simhash slices (a pair within
+    hamming distance <= n_blocks-1 shares at least one block by
+    pigeonhole), :func:`blocked_pairs` on (block, block_key), verify
+    exact hamming distance.
+
+    The width cap drops hot block keys — e.g. simhash 0 for
+    empty/near-empty docs — so the pigeonhole guarantee no longer
+    implies a pair is emitted: a pair whose ONLY shared block is wider
+    than ``max_bucket`` is silently lost. The second output,
+    (block, block_key, width), lists those buckets; a large result means
+    raise ``max_bucket`` (small corpora) or accept the documented bound
+    (degenerate content at scale, where the pairs are uninteresting).
+    The checkpoint runs the Python pass exactly once over the corpus
+    and spreads it off a single scan split.
+    Returns ((id1, id2, hamming), (block, block_key, width))."""
     from ..session import spread_partitions
 
-    with_sh = spread_partitions(docs).select(
-        F.col(id_col), simhash_col(F.col(text_col)).alias("simhash")
+    with_sh = (
+        spread_partitions(docs)
+        .select(F.col(id_col), simhash_col(F.col(text_col)).alias("simhash"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        with_sh = with_sh.localCheckpoint(eager=True)
     blocks = with_sh.select(
         F.col(id_col),
         "simhash",
@@ -426,93 +417,16 @@ def _simhash_core(docs, id_col, text_col, n_blocks, checkpoint=True):
             )
         ).alias("block", "block_key"),
     )
-    widths = blocks.groupBy("block", "block_key").agg(F.count(F.lit(1)).alias("width"))
-    return blocks, widths
-
-
-def _simhash_pairs(blocks, widths, id_col, max_hamming, max_bucket):
-    sized = widths.where(
-        (F.col("width") > 1) & (F.col("width") <= max_bucket)
-    ).select("block", "block_key")
-    kept = blocks.join(sized, ["block", "block_key"])
-    a = kept.select(
-        F.col(id_col).alias("id1"), F.col("simhash").alias("sh1"), "block", "block_key"
+    cand, dropped = blocked_pairs(
+        blocks, id_col, ("block", "block_key"), max_bucket, carry=("simhash",)
     )
-    b2 = kept.select(
-        F.col(id_col).alias("id2"), F.col("simhash").alias("sh2"), "block", "block_key"
-    )
+    hamming = F.bit_count(F.col("simhash1").bitwiseXOR(F.col("simhash2")))
     pairs = (
-        a.join(b2, ["block", "block_key"])
-        .where(F.col("id1") < F.col("id2"))
-        .dropDuplicates(["id1", "id2"])
+        cand.dropDuplicates(["id1", "id2"])
+        .select("id1", "id2", hamming.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
     )
-    hamming = F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2")))
-    return pairs.select("id1", "id2", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def dedup_simhash_with_audit(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    max_bucket: int = 64,
-):
-    """(pairs, dropped_buckets) from ONE Arrow simhash pass — twin of
-    :func:`dedup_minhash_with_audit`; see there for why running the
-    pair op and its audit separately doubles the corpus-scale Python
-    work."""
-    blocks, widths = _simhash_core(docs, id_col, text_col, n_blocks)
-    pairs = _simhash_pairs(blocks, widths, id_col, max_hamming, max_bucket)
-    return pairs, widths.where(F.col("width") > max_bucket)
-
-
-def simhash_dropped_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_blocks: int = 4,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Recall diagnostic for :func:`dedup_simhash`: the (block,
-    block_key, width) buckets its width cap DROPS. With the cap, the
-    pigeonhole guarantee (hamming <= n_blocks-1 implies a shared block)
-    no longer implies a pair is emitted — a pair whose ONLY shared block
-    is wider than ``max_bucket`` is silently lost. Run this (cheap:
-    count-only aggregation, no self-join) to audit how much of the
-    corpus sits in dropped buckets before trusting the recall; a large
-    result means raise ``max_bucket`` (small corpora) or accept the
-    documented bound (degenerate content at scale, e.g. simhash 0 for
-    empty docs, where the pairs are uninteresting anyway). When the
-    pair op ALSO runs in the same job, use
-    :func:`dedup_simhash_with_audit` instead — it shares the Arrow
-    pass; this standalone form re-executes it (streaming, unspilled:
-    checkpoint=False, single consumer)."""
-    _, widths = _simhash_core(docs, id_col, text_col, n_blocks, checkpoint=False)
-    return widths.where(F.col("width") > max_bucket)
-
-
-def minhash_dropped_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Recall diagnostic for :func:`dedup_minhash`, twin of
-    :func:`simhash_dropped_buckets`: the (band, band_key, width) LSH
-    buckets the width cap DROPS. A candidate pair whose ONLY shared
-    band bucket is wider than ``max_bucket`` is silently lost; this
-    count-only aggregation (no self-join, no id lists) makes that
-    recall bound observable per run. When the pair op ALSO runs in the
-    same job, use :func:`dedup_minhash_with_audit` instead — it shares
-    the shingle/md5 pass."""
-    _, _, widths = _minhash_core(docs, id_col, text_col, k, bands, n, checkpoint=False)
-    return widths.where(F.col("width") > max_bucket)
+    return pairs, dropped
 
 
 def cosine_col(a: Column, b: Column) -> Column:
@@ -552,37 +466,28 @@ def dedup_embedding(
     coarse quantizer: label here; an IVF centroid assignment at scale —
     see similarity.ivf_assign). Returns (id1, id2, cosine).
 
-    Blocks wider than ``max_bucket`` are dropped before the self-join —
-    the same count-only width guard as dedup_minhash/dedup_simhash: a
-    hot quantizer cell (one label holding millions of vectors at 100 TB)
-    would otherwise go quadratic. The filter aggregates counts only (no
-    buffer ever holds a full bucket) and joins the surviving keys back.
-    Recall bound: a near-dup pair inside a dropped cell is NOT emitted —
-    shrink cells (more centroids) rather than raising the cap."""
-    sized = (
-        embeddings.groupBy(F.col(block_col).alias("blk"))
-        .agg(F.count(F.lit(1)).alias("width"))
-        .where((F.col("width") > 1) & (F.col("width") <= max_bucket))
-        .select("blk")
-    )
+    Pairs come from :func:`blocked_pairs` on the block: a hot quantizer
+    cell (one label holding millions of vectors at 100 TB) is dropped
+    before the self-join instead of going quadratic. Recall bound: a
+    near-dup pair inside a dropped cell is NOT emitted — shrink cells
+    (more centroids) rather than raising the cap; audit with
+    :func:`embedding_dropped_buckets`."""
     # within-block pair work is quadratic: spread a single-split corpus
     # by block before the self-join (session.spread_partitions no-ops on
     # a real multi-split scan). Width is bounded by the number of
     # distinct blocks — see the cardinality caveat in spread_partitions.
     from ..session import spread_partitions
 
-    spread = spread_partitions(embeddings, block_col)
-    a = spread.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id1"), F.col(vec_col).alias("v1")
+    keyed = spread_partitions(embeddings, block_col).select(
+        F.col(block_col).alias("block"), F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-    b = spread.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id2"), F.col(vec_col).alias("v2")
-    )
+    cand, _ = blocked_pairs(keyed, "id", ("block",), max_bucket, carry=("v",))
+    # verify before deduping: the cosine is row-local, and the dedupe
+    # then never buffers the vectors
     return (
-        a.join(sized, "blk").join(b, "blk")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.round(cosine_col(F.col("v1"), F.col("v2")), 6).alias("cosine"))
+        cand.select("id1", "id2", F.round(cosine_col(F.col("v1"), F.col("v2")), 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
+        .dropDuplicates(["id1", "id2"])
     )
 
 
@@ -591,20 +496,16 @@ def embedding_dropped_buckets(
     block_col: str = "label",
     max_bucket: int = 1024,
 ) -> DataFrame:
-    """Recall diagnostic for :func:`dedup_embedding`, completing the
-    family (:func:`simhash_dropped_buckets`,
-    :func:`minhash_dropped_buckets`): the (block, width) quantizer
-    cells its width cap DROPS. A near-dup pair inside a dropped cell is
-    silently lost; this count-only aggregation makes that bound
-    observable per run. Cheaper than its siblings — no hash pass, just
-    one count over the blocking column; a large result means the
-    quantizer is too coarse (more centroids), not that the cap should
-    rise."""
-    return (
-        embeddings.groupBy(F.col(block_col).alias("block"))
-        .agg(F.count(F.lit(1)).alias("width"))
-        .where(F.col("width") > max_bucket)
-    )
+    """Recall diagnostic for :func:`dedup_embedding`: the (block, width)
+    quantizer cells its width cap DROPS, from the same
+    :func:`blocked_pairs` decision. A near-dup pair inside a dropped
+    cell is silently lost; this count-only aggregation makes that bound
+    observable per run. A large result means the quantizer is too
+    coarse (more centroids), not that the cap should rise."""
+    # the audit reads only the width aggregation, which needs no id:
+    # the block column stands in for one
+    keyed = embeddings.select(F.col(block_col).alias("block"))
+    return blocked_pairs(keyed, "block", ("block",), max_bucket)[1]
 
 
 def dedup_ngram_jaccard(
@@ -688,34 +589,22 @@ def containment_pairs(
     larger containment clears ``threshold``; ``contained_id`` is the
     more-contained side (tie -> id1, the lower id).
 
-    Scale shape: the same count-only width guard as dedup_minhash /
-    dedup_simhash — shingles shared by more than ``max_bucket`` docs
+    Scale shape: candidates come from :func:`blocked_pairs` keyed on
+    the shingle — shingles shared by more than ``max_bucket`` docs
     (boilerplate n-grams, by far the hot keys of a web corpus) are
     dropped BEFORE the self-join, so no bucket goes quadratic and no
     aggregation buffer holds a degenerate bucket; recall bound: a
     contained pair whose EVERY shared shingle is boilerplate-wide is
-    not emitted (audit with the dropped-width pattern if that
-    matters). Verification joins the checkpointed distinct-shingle
+    not emitted (blocked_pairs' dropped output lists those shingles if
+    that matters). Verification joins the checkpointed distinct-shingle
     table back twice by id — exact intersection, pair-count-bounded
     work. All hashes engine-portable (DuckDB-replayable)."""
     sh = shingle_table(docs, id_col, text_col, n, hashed=True).localCheckpoint(
         eager=True
     )
     ex = sh.select(F.col(id_col).alias("id"), F.explode("sh").alias("g"))
-    kept_keys = (
-        ex.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("width"))
-        .where((F.col("width") > 1) & (F.col("width") <= max_bucket))
-        .select("g")
-    )
-    cand = ex.join(kept_keys, "g")
-    pairs = (
-        cand.select(F.col("id").alias("id1"), "g")
-        .join(cand.select(F.col("id").alias("id2"), "g"), "g")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
+    cand, _ = blocked_pairs(ex, "id", ("g",), max_bucket)
+    pairs = cand.select("id1", "id2").dropDuplicates(["id1", "id2"])
     j = (
         pairs.join(sh.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1")), "id1")
         .join(sh.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2")), "id2")
@@ -1057,10 +946,11 @@ def winnow_fingerprints(
     fp_hash); documents with fewer than w shingles emit none (the
     guarantee's floor — shorter overlaps are dup_spans' regime).
     Equal hashes DO occur inside windows whenever a shingle repeats
-    ("a a a a"), so the tie-break is the paper's robust-winnowing
-    rule, made explicit: the RIGHTMOST minimal hash wins — one
-    deterministic (hash asc, position desc) ordering in every engine,
-    never an unspecified arg-min.
+    ("a a a a"), so the tie-break is made explicit: the RIGHTMOST
+    minimal hash wins, as in standard winnowing (Schleimer et al. 2003;
+    their robust winnowing is a different rule, which reuses the
+    previous window's pick) — one deterministic (hash asc, position
+    desc) ordering in every engine, never an unspecified arg-min.
 
     Spark shape: shingle hashes are row-local; each position explodes
     to the <= w full windows covering it (bounded fan-out w — the
@@ -1130,29 +1020,15 @@ def winnow_pairs(
     text_col: str = "text",
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints, with the shared
-    count — the overlap product MOSS reports. Fingerprint-keyed equi
-    join with ubiquitous hashes dropped at ``max_bucket`` (boilerplate
-    shingles every page carries; the simhash width-cap discipline).
-    Returns (id1, id2, n_shared)."""
+    count — the overlap product MOSS reports. :func:`blocked_pairs`
+    keyed on the fingerprint, with ubiquitous hashes dropped at
+    ``max_bucket`` (boilerplate shingles every page carries); each
+    candidate row is one shared fingerprint, so counting them per pair
+    is the verify step. Returns (id1, id2, n_shared)."""
     fp = winnow_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col
     ).select(F.col(id_col).alias("id"), "fp_hash").dropDuplicates()
-    ok = (
-        fp.groupBy("fp_hash")
-        .agg(F.count(F.lit(1)).alias("_w"))
-        .where((F.col("_w") > 1) & (F.col("_w") <= max_bucket))
-        .select("fp_hash")
-    )
-    kept = fp.join(ok, "fp_hash")
-    a, b = kept.alias("a"), kept.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp_hash") == F.col("b.fp_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id1"), F.col("b.id").alias("id2")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    cand, _ = blocked_pairs(fp, "id", ("fp_hash",), max_bucket)
+    return cand.groupBy("id1", "id2").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shared")
     )

@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .dedup import blocked_pairs
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -206,9 +208,9 @@ def media_near_dup(
     the media twin of the simhash text family: 16-bit signatures split
     into 3 bands (6/5/5 bits; <= ``max_hamming`` = 2 errors can ruin
     at most two bands, so every true pair collides in >= 1 band —
-    pigeonhole-complete), band-bucket equi join with ubiquitous
-    buckets dropped at ``max_bucket`` (the simhash width-cap
-    discipline, a documented recall trade), XOR+popcount verify.
+    pigeonhole-complete), :func:`dedup.blocked_pairs` on the band
+    bucket with ubiquitous buckets dropped at ``max_bucket`` (a
+    documented recall trade), XOR+popcount verify.
     Returns (id1, id2, sig1, sig2, hamming)."""
     sigs = byte_signatures(media).where(F.col("sig").isNotNull()).localCheckpoint(
         eager=True
@@ -224,29 +226,10 @@ def media_near_dup(
             "media_id", "sig", F.lit(bi).alias("band"), bv
         )
         exploded = part if exploded is None else exploded.unionByName(part)
-    ok = (
-        exploded.groupBy("band", "bv")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where((F.col("w") > 1) & (F.col("w") <= max_bucket))
-        .select("band", "bv")
+    cand, _ = blocked_pairs(
+        exploded, "media_id", ("band", "bv"), max_bucket, carry=("sig",)
     )
-    kept = exploded.join(ok, ["band", "bv"])
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id1"),
-            F.col("b.media_id").alias("id2"),
-            F.col("a.sig").alias("sig1"),
-            F.col("b.sig").alias("sig2"),
-        )
-        .dropDuplicates()
-    )
+    cand = cand.select("id1", "id2", "sig1", "sig2").dropDuplicates()
     ham = F.bit_count(
         F.col("sig1").bitwiseXOR(F.col("sig2"))
     ).cast("long")

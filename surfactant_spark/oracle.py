@@ -15,7 +15,7 @@ from typing import Dict, Set, Tuple
 
 import pandas as pd
 
-from .functions.hashing import canon_uuid, entity_uuid, sha256_hex
+from .functions.hashing import canon_uuid, sha256_hex
 from .functions.textlib import detect_mentions, extract_text, extract_title
 
 
@@ -134,20 +134,6 @@ def run_oracle(
 
     triple_set = set(triple_evidence.keys())
     return nodes, edges, triple_set
-
-
-def entity_nodes(alias_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Canonical entity surface: canonical entity -> uuid + alias list."""
-    alias_to_ent = canonical_entity_map(alias_pdf)
-    inv: Dict[str, Set[str]] = {}
-    for alias, ent in alias_to_ent.items():
-        inv.setdefault(ent, set()).add(alias)
-    return pd.DataFrame(
-        [
-            {"canon_name": ent, "uuid": entity_uuid(ent), "aliases": sorted(al)}
-            for ent, al in sorted(inv.items())
-        ]
-    )
 
 
 def precision_recall(

@@ -337,8 +337,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall bound: the default max_bucket=64 drops candidate pairs
     whose only shared 16-bit block lands in a bucket wider than 64 rows
     (degenerate content, e.g. all-empty docs hashing to 0) — audit with
-    operators.dedup.simhash_dropped_buckets before trusting recall on a
-    new corpus; the oracle mirrors the same cap so parity is exact."""
+    the second output of operators.dedup.dedup_simhash_with_audit before
+    trusting recall on a new corpus; the oracle mirrors the same cap so
+    parity is exact."""
     return dedup_simhash(
         _read(spark, sf_dir, "documents"), max_hamming=SIMHASH_MAX_HAMMING
     )
@@ -2320,7 +2321,7 @@ per_doc AS (
 ts AS (
   SELECT doc_id, len(toks) AS nt, len(list_distinct(toks)) AS nd FROM toks)
 SELECT t.doc_id,
-       COALESCE(p.nb, 0) AS n_bigrams,
+       CAST(COALESCE(p.nb, 0) AS BIGINT) AS n_bigrams,
        round(CASE WHEN p.nb IS NULL THEN 0.0 ELSE p.topc * 1.0 / p.nb END, 6)
          AS top_bigram_frac,
        round(CASE WHEN p.nb IS NULL THEN 0.0 ELSE p.dupc * 1.0 / p.nb END, 6)

@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """48g, or half the host's RAM when that is smaller. G1 grows its
+    young generation toward the max heap under allocation pressure, so
+    a max heap above physical memory lets the driver JVM outgrow the
+    host and be OOM-killed mid-job (seen at ~15 GB RSS on a 16 GB host)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "surfactant_spark",
     master: str | None = None,
@@ -49,7 +58,10 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # this sandbox VM has lazily host-backed memory: first touch of
         # a new page costs 1-9 s/GB (host-side fault). A fixed,
         # pre-touched heap (set e.g. "-Xms24g -XX:+AlwaysPreTouch" via

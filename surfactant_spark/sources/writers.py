@@ -18,20 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def write_nodes(nodes: DataFrame, path: str) -> None:
-    """Nodes bucketed by hash prefix of sha256 — at 100 TB this gives
-    uniformly sized files and lets a downstream join on sha256 prune."""
-    nodes.withColumn("bucket", F.pmod(F.xxhash64("sha256"), F.lit(64))).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
-
-
-def write_edges(edges: DataFrame, path: str) -> None:
-    """Edges partitioned by predicate (low-cardinality; partition
-    pruning for per-predicate consumers)."""
-    edges.write.mode("overwrite").partitionBy("pred").parquet(path)
-
-
 def csv_export(nodes: DataFrame) -> DataFrame:
     """One row per (node, alias path) — the reference CSV writer's
     explode (`output/csv_writer.py:55-74`)."""

@@ -29,17 +29,6 @@ def streaming_extract(pages_stream: DataFrame) -> DataFrame:
     return extract_pages(pages_stream)
 
 
-def streaming_new_content(extracted_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """First sighting of each content hash within the watermark horizon
-    (stateful dropDuplicates — the streaming analogue of the sha256
-    dedup index, `_sbom.py:75-83`)."""
-    return (
-        extracted_stream.withWatermark("warc_ts", watermark)
-        .dropDuplicates(["content_sha256"])
-        .select("url", "warc_ts", "content_sha256", "title", "n_mentions")
-    )
-
-
 def windowed_event_counts(events: DataFrame, window: str = "10 minutes") -> DataFrame:
     """Tumbling-window per-type event counts — batch form. The window
     boundaries are epoch-aligned, so the streaming twin and the DuckDB

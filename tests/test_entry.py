@@ -83,3 +83,13 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0
     assert len(df.schema.fields) >= 3
+
+
+def test_doc_repetition_n_bigrams_is_integer_in_both_engines(spark, ddb):
+    """n_bigrams is a count: the oracle must return it with an integer
+    dtype, as Spark does, not the float DuckDB gives a bare COALESCE
+    over a SUM."""
+    want = ddb.execute(entry_mod.oracle_sql()["doc_repetition"]).fetchdf()
+    assert pd.api.types.is_integer_dtype(want["n_bigrams"]), want["n_bigrams"].dtype
+    got = entry_mod.queries()["doc_repetition"](spark, SF_DIR).toPandas()
+    assert pd.api.types.is_integer_dtype(got["n_bigrams"]), got["n_bigrams"].dtype

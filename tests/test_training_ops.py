@@ -236,15 +236,38 @@ def test_embedding_degenerate_block_bounded(spark):
 
 
 def test_simhash_dropped_buckets_diagnostic(spark):
-    from surfactant_spark.operators.dedup import simhash_dropped_buckets
+    from surfactant_spark.operators.dedup import dedup_simhash_with_audit
 
     rows = [(i, "") for i in range(200)] + [(1000, "alpha beta"), (1001, "alpha beta")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    dropped = simhash_dropped_buckets(df, max_bucket=64).collect()
+    dropped = dedup_simhash_with_audit(df, max_bucket=64)[1].collect()
     # the 200 empty docs share simhash 0 -> 4 blocks of width 200 dropped
     assert len(dropped) == 4
     assert all(r.width == 200 for r in dropped)
-    assert simhash_dropped_buckets(df, max_bucket=500).count() == 0
+    assert dedup_simhash_with_audit(df, max_bucket=500)[1].count() == 0
+
+
+def test_blocked_pairs_width_cap_boundary(spark):
+    """The shared candidate-pair primitive's cap is inclusive: a key of
+    width exactly max_bucket pairs, one of width max_bucket + 1 is
+    dropped (and reported with its width), a width-1 key is in neither
+    output, and a pair sharing two keys yields one row per key."""
+    from surfactant_spark.operators.dedup import blocked_pairs
+
+    cap = 4
+    rows = [(i, "at_cap", 10 * i) for i in range(cap)]
+    rows += [(100 + i, "over_cap", 0) for i in range(cap + 1)]
+    rows += [(200, "single", 0), (0, "shared", 0), (1, "shared", 10)]
+    keyed = spark.createDataFrame(rows, "id long, k string, payload long")
+    cand, dropped = blocked_pairs(keyed, "id", ("k",), cap, carry=("payload",))
+    got = cand.collect()
+    assert sorted(r.k for r in got) == ["at_cap"] * (cap * (cap - 1) // 2) + ["shared"]
+    assert sorted((r.id1, r.id2) for r in got if r.k == "shared") == [(0, 1)]
+    assert all(r.id1 < r.id2 for r in got)
+    assert all(r.payload1 == 10 * r.id1 and r.payload2 == 10 * r.id2 for r in got)
+    assert [(r.k, r.width) for r in dropped.collect()] == [("over_cap", cap + 1)]
+    assert cand.columns == ["k", "id1", "payload1", "id2", "payload2"]
+    assert dropped.columns == ["k", "width"]
 
 
 def test_embedding_dropped_buckets_diagnostic(spark):
